@@ -1,6 +1,7 @@
 """op-05: per-partition lineage + metrics.
 
-After each stage checkpoint, one cheap scan over the materialized table
+After each stage checkpoint, the stage runner's finalize
+(kgc/plans/stage.py) makes one cheap scan over the materialized table that
 records (stage, partition_id, rows_out, fingerprint) where fingerprint is an
 order-independent sum of per-row xxhash64 — equal fingerprints across a
 resume prove the stage reproduced byte-identical content partition by
@@ -8,8 +9,6 @@ partition (determinism §2.4-E makes this meaningful).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -73,11 +72,6 @@ def partition_metrics_arrow(df: DataFrame, stage: str) -> DataFrame:
         .agg(F.sum("rows_out").alias("rows_out"), F.expr("bit_xor(fingerprint)").alias("fingerprint"))
         .select(F.lit(stage).alias("stage"), "partition_id", "rows_out", "fingerprint")
     )
-
-
-def emit_metrics(df: DataFrame, stage: str, metrics_dir: str) -> None:
-    out = os.path.join(metrics_dir, stage)
-    partition_metrics(df, stage).write.mode("overwrite").parquet(out)
 
 
 def table_fingerprint(df: DataFrame) -> int:

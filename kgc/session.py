@@ -72,15 +72,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
         .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        # FAIR job scheduling (guide §2.6): run_pipeline/run_curation submit
-        # independent stages + deferred finalize scans from driver threads;
-        # under FIFO a short concurrent stage (canonicalize, 2.4 s of work)
-        # queues behind the doc chain's stages and tails for 9-14 s of
-        # shared-capacity wall. FAIR interleaves the concurrent jobs:
-        # measured sf0.1 warm e2e 29.5-29.9 s → 25.9-27.8 s AND the
-        # overlapped stages' own walls halve. Sections that run one job at
-        # a time behave exactly as FIFO. Overridable via KGC_CONF.
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")

@@ -212,26 +212,6 @@ def write_manifest(path: str, stage: str, input_fingerprint: str, rows: int, sch
         json.dump(manifest, f, indent=2)
 
 
-def checkpoint(
-    df: DataFrame,
-    path: str,
-    stage: str,
-    input_fingerprint: str,
-    bucket_by: str | None = None,
-    n_buckets: int = N_BUCKETS_DEFAULT,
-) -> DataFrame:
-    """Write `df` durably + a manifest binding it to its input fingerprint.
-
-    Returns the re-read DataFrame (truncates lineage — downstream stages plan
-    against the materialized table, not the whole upstream DAG).
-    """
-    spark = df.sparkSession
-    write_table(df, path, bucket_by=bucket_by, n_buckets=n_buckets)
-    n_rows = spark.read.parquet(path).count()
-    write_manifest(path, stage, input_fingerprint, n_rows, df.schema.simpleString())
-    return read_table(spark, path)
-
-
 def resume(spark: SparkSession, path: str, stage: str, input_fingerprint: str) -> DataFrame | None:
     """Return the checkpointed DataFrame iff a valid manifest matches the
     expected input fingerprint; None → stage must (re)compute."""

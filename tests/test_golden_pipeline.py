@@ -134,6 +134,13 @@ class TestAutoSimilaritySelect:
         )
         assert info["sim_mode"] == "exact"
         assert 0 < info["sim_predicted_pairs"] < 1e12
+        # bench.py flattens these into its pipeline_stage_<name> keys
+        stage_sec = info["stage_sec"]
+        assert set(stage_sec) == {
+            "ingest", "extract", "link", "canonicalize", "triples",
+            "attribute", "similarity", "recommend", "similarity_select",
+        }
+        assert all(v >= 0 for v in stage_sec.values()), stage_sec
 
 
 class TestResume:
@@ -166,24 +173,40 @@ class TestResume:
 
 class TestCrashRecovery:
     def test_mid_pipeline_crash_then_resume(self, spark, tmp_path, monkeypatch):
-        """Simulate a crash during the similarity stage: the run dies, a
-        fresh run resumes every completed stage and recomputes only the
-        rest, and the final triples equal an uninterrupted run's."""
+        """Simulate a crash during the similarity stage: the run dies only
+        after every completed stage has its manifest (no finalize job
+        outlives the failed call, even a slow one), a fresh run resumes
+        every completed stage and recomputes only the rest, and the final
+        triples equal an uninterrupted run's."""
+        import time
+
         import kgc.operators.similarity as sim
+        import kgc.sources.catalog as catalog
         from kgc.sources.synth import ground_truth_triples
 
         workdir = str(tmp_path / "crash")
         real = sim.similar_to_exact
+        real_write_manifest = catalog.write_manifest
 
         def boom(*a, **k):
             raise RuntimeError("injected crash")
 
+        def slow_write_manifest(*a, **k):
+            time.sleep(0.5)
+            real_write_manifest(*a, **k)
+
+        monkeypatch.setattr(catalog, "write_manifest", slow_write_manifest)
         monkeypatch.setattr(sim, "similar_to_exact", boom)
         import kgc.plans.run as runmod
 
         monkeypatch.setattr(runmod, "similar_to_exact", boom)
         with pytest.raises(RuntimeError, match="injected crash"):
             run_pipeline(spark, workdir, SF, force=True)
+        completed = ["ingest", "extract", "link", "canonicalize", "triples", "attribute"]
+        missing = [s for s in completed
+                   if not os.path.exists(os.path.join(workdir, s, "_MANIFEST.json"))]
+        assert missing == [], f"manifests still pending when the crash surfaced: {missing}"
+        monkeypatch.setattr(catalog, "write_manifest", real_write_manifest)
         monkeypatch.setattr(runmod, "similar_to_exact", real)
         tables = run_pipeline(spark, workdir, SF)  # resume
         gt = ground_truth_triples(spark, SF)
@@ -191,3 +214,21 @@ class TestCrashRecovery:
         pr = pr_eval(tables["triples"].select(*keys), gt.select(*keys), keys)
         assert pr["precision"] == 1.0 and pr["recall"] == 1.0
         assert tables["recommendations"].count() > 0
+
+    def test_runner_error_precedence(self, tmp_path):
+        """A stage that fails beside the caller surfaces when the runner
+        exits; when the caller fails too, the caller's exception wins. The
+        failing builds raise before any Spark work, so no session is needed."""
+        from kgc.plans.stage import StageRunner
+
+        def boom():
+            raise RuntimeError("stage failed")
+
+        with pytest.raises(RuntimeError, match="stage failed"):
+            with StageRunner(None, str(tmp_path), "fp", True, {}) as stages:
+                stages.start("side", boom)
+        with pytest.raises(ValueError, match="caller failed"):
+            with StageRunner(None, str(tmp_path), "fp", True, {}) as stages:
+                fut = stages.start("side", boom)
+                raise ValueError("caller failed")
+        assert fut.done()
